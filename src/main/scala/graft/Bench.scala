@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query seconds
   * on SPARK_GRAFT_SF_DIR. Headline set per BASELINE.md — one query per
   * heavy category — plus the tuner loop. Results are forced through the
@@ -92,13 +90,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.core.LocalSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Scan-split override for evidence runs (round 14): the third decade
     // exposed that a single-file compressed-text fixture starves the
     // tokenize stage at the default 128 MB split (sf10 documents = ONE
@@ -653,8 +646,9 @@ object Bench {
         // by the MEASURED byte growth — the honest reading for
         // byte-bound queries (token explodes, per-char scans); row-bound
         // queries keep the raw map as theirs. Normalization was a manual
-        // VocabProbe step in round 12; a future reader of this record no
-        // longer has to know to do it.
+        // step in round 12 (BENCH_NOTES "Round 12 — second decade",
+        // bench_evidence/r12_vocab_probe.txt); a future reader of this
+        // record no longer has to know to do it.
         def corpusChars(dir: String): Double = scala.util.Try {
           spark.read.parquet(s"$dir/documents.parquet")
             .agg(org.apache.spark.sql.functions.sum(

@@ -86,9 +86,10 @@ object AnnIvfPq {
     // Derived from the PERSISTED assignment and materialized once
     // (optimization r16, lineage truncation): the old frame reused the
     // un-truncated `assigned` plan, so every codebook-fit action replayed
-    // the full N·K assignment scoring — StageBreakdown at sf0.1 read
-    // multi-second single-task CPU stages for each replay. Same rows,
-    // same doubles (assignment values come from the same persisted table).
+    // the full N·K assignment scoring — the stage breakdown at sf0.1
+    // (OPTIMIZATION_r16.md §1) read multi-second single-task CPU stages
+    // for each replay. Same rows, same doubles (assignment values come
+    // from the same persisted table).
     val assignedP = s.read.parquet(s"$indexDir/assigned")
     val residuals = graft.core.Materialize(
       en.join(assignedP, "vec_id")

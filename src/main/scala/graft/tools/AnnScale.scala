@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.PlantedEmbeddings
 import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
 
@@ -28,14 +27,8 @@ import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
   */
 object AnnScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftExtensions.ensureRegistered(spark)
 
@@ -62,7 +55,7 @@ object AnnScale {
     }
     points.foreach { case (numClusters, coarseK, nprobe) =>
       val e = PlantedEmbeddings.df(spark, numClusters)
-        .repartition(cpus.toInt).cache()
+        .repartition(cpus).cache()
       val n = e.count() // materialize before timing
       val q = PlantedEmbeddings.queries(e, maxQid = 1000)
       val nq = q.count()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
@@ -133,12 +132,8 @@ object ReuseProbe {
       "q_bigram_lm", "q_tfidf_keywords", "q_containment_pairs",
       "q_source_kl", "q_vocab_cdf", "q_zipf_slope", "q_dedup_rate",
       "q_threshold_sweep", "q_temperature_mix", "q_cumulative_users")
-    val spark = SparkSession.builder()
-      .appName("graft-reuse-probe").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.core.LocalSession.builder(8)
+      .appName("graft-reuse-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-24s corpus scratch reusedStages reusedNodes")
     names.foreach { n =>

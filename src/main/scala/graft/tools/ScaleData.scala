@@ -46,12 +46,9 @@ object ScaleData {
     // scale block (a missing table fails its query loudly with the -1
     // sentinel, never silently).
     val tables = args.lift(4).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.core.LocalSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     expand(spark, src, dst, factor, tag, tables)
@@ -112,8 +109,9 @@ object ScaleData {
     *   truth is 1.0. Since round 13 the Bench scale block measures the
     *   per-dir corpus chars itself and emits `bytes_factor` +
     *   `exponents_bytes` next to the raw exponents (VERDICT r12 item 3)
-    *   — read those for token/byte-bound queries; graft.tools.VocabProbe
-    *   remains the deeper diagnostic (vocab loads, chars/token). */
+    *   — read those for token/byte-bound queries; the deeper
+    *   diagnostic (vocab loads, chars/token) is recorded in BENCH_NOTES
+    *   "Round 12 — second decade" and bench_evidence/r12_vocab_probe.txt. */
   def expand(s: SparkSession, src: String, dst: String, factor: Int,
       tag: String = "", tables: Option[Set[String]] = None): Unit = {
     // Chained-tag guard (ADVICE r13): expanding a ScaleData OUTPUT with

@@ -10,13 +10,9 @@ object SparkSpec {
   // path is live (plain local[N] pins maxFailures to 1 and any injected
   // task failure would kill the job instead of retrying — the
   // RetryIdempotenceSpec contract needs the scheduler's real retry).
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.core.LocalSession.builder(4)
     .master("local[4, 2]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 
