@@ -43,9 +43,8 @@ case class DotProduct(left: Expression, right: Expression)
   // truncated to min(length) and returned a plausible PARTIAL sum, a
   // silent wrong-answer path for any malformed short vector. Equal-length
   // behavior is bit-identical to before (same sequential accumulation).
-  // NULL ELEMENTS inside equal-length arrays are read as primitive slots
-  // (undefined content, typically 0.0) — every call site casts parquet
-  // non-null doubles, so this stays out of scope like it was for the HOF.
+  // A NULL ELEMENT on either side also yields NULL, as the fold's null
+  // product did; reading its primitive slot would sum undefined content.
   override def nullable: Boolean = true
 
   override def checkInputDataTypes()
@@ -67,7 +66,10 @@ case class DotProduct(left: Expression, right: Expression)
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0.0; var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getDouble(i) * y.getDouble(i); i += 1
+    }
     acc
   }
 
@@ -83,6 +85,7 @@ case class DotProduct(left: Expression, right: Expression)
         } else {
           double $acc = 0.0;
           for (int $i = 0; $i < $n; $i++) {
+            if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
             $acc += $a.getDouble($i) * $b.getDouble($i);
           }
           ${ev.value} = $acc;

@@ -139,11 +139,4 @@ class ComputePartitions(conf: Map[String, String]) {
     val mb = math.max(4.0, math.min(1024.0, math.min(byMemoryMb, bySlotsMb)))
     math.round(mb * 1024 * 1024)
   }
-
-  /** The reference's dead-code single-run policy (:76-98), kept as a
-    * documented alternative: full utilization ⇒ keep; otherwise grow
-    * toward the floor. */
-  def fromStageMetricFullUtilization(stage: StageRunInfo): Int =
-    if (stage.executorIdleTimeMs <= 0) stage.numPartitionsUsed
-    else math.max(partitionsFloor(stage.inputSizeMb), stage.numPartitionsUsed + 1)
 }

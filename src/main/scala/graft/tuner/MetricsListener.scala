@@ -60,9 +60,8 @@ class MetricsListener(runId: Int) extends SparkListener {
   * listener gets its metrics persisted when the application ends, even if
   * it never reaches an explicit persist call (abnormal exit paths
   * included, as long as SparkContext.stop() runs — Spark's own shutdown
-  * hook triggers it). The flush writes JSON-lines via the Hadoop FS API
-  * because no Spark job can be submitted once stop() is underway; see
-  * [[MetricsStore.persistDirect]].
+  * hook triggers it). [[MetricsStore.persist]] writes through the Hadoop
+  * FS API without a Spark job, so it works once stop() is underway.
   *
   * Use either this (ambient recording) or [[Tuner.withRecording]]
   * (scoped recording) for a given store — not both in one app, or the
@@ -78,7 +77,7 @@ class FlightRecorder(store: MetricsStore, runId: Int,
     * exit) — the application-end delivery then becomes a no-op. */
   def flush(): Unit = synchronized {
     if (!flushed) {
-      store.persistDirect(hadoopConf, this, runId)
+      store.persist(hadoopConf, runId, stageRows, taskRows)
       flushed = true
     }
   }

@@ -1,144 +1,88 @@
 package graft.tuner
 
-import org.apache.spark.sql.{Encoder, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Encoder, SparkSession}
 
-/** Parquet metrics store, one layout for both kinds (fixes reference quirk
-  * Q3 — the reference wrote stage metrics outside its own subdir):
+/** Run store: one JSON-lines file per run and kind, written on the driver
+  * through the Hadoop FS API, like the reference's flight recorders write
+  * one file per run (Listener.scala:25-42):
   *
-  *   <root>/<appName>/kind=stage/run=N/  (parquet files)
-  *   <root>/<appName>/kind=task/run=N/   (parquet files)
+  *   <root>/<appName>/flight_stage/run-N.jsonl   (one StageMetric a line)
+  *   <root>/<appName>/flight_task/run-N.jsonl    (one TaskMetric a line)
   *
-  * Replaces the reference's Java-serialized sparkMeasure files
-  * (Listener.scala:25-42). Partition discovery over `run=N` gives the
-  * history scan and next-run-id allocation for free.
+  * Writing needs no Spark job, so the same [[persist]] serves a scoped
+  * recording ([[Tuner.withRecording]]) and the application-end flush of
+  * a [[FlightRecorder]], when SparkContext.stop() already forbids jobs.
   */
 class MetricsStore(root: String, appName: String) {
   private def base = s"$root/$appName"
+  private def dir(kind: String) = s"$base/flight_$kind"
+  private val runFile = "^run-(\\d+)\\.jsonl$".r
 
-  /** True iff the store path exists on whatever FS `root` points at.
-    * Checked BEFORE reading so a first-ever run takes the empty-history
-    * path without an AnalysisException ever being thrown (the thrown/
-    * caught variant left stack traces in app stderr and hid real
-    * corruption behind the same catch). */
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path)
+  /** Fields added to the model after stores were written; older lines
+    * lack them and read back as 0 (see `TaskMetric.shuffleReadBytes`). */
+  private val laterFields = Seq("shuffleReadBytes")
+
+  private def exists(conf: Configuration, p: String): Boolean = {
+    val path = new Path(p)
+    path.getFileSystem(conf).exists(path)
   }
 
-  def persist(spark: SparkSession, listener: MetricsListener, runId: Int): Unit =
-    persistRows(spark, listener.stageRows, listener.taskRows, runId)
-
-  /** Persist explicit row snapshots. Callers that also want an in-memory
-    * view of the run (Tuner.tuneAndRunTracked) snapshot the listener ONCE
-    * and pass the same rows here — the persist jobs' own stage/task events
-    * keep arriving on the still-attached listener, so two separate
-    * listener reads would record different runs. */
-  def persistRows(spark: SparkSession, stages: Seq[StageMetric],
-      tasks: Seq[TaskMetric], runId: Int): Unit = {
-    import spark.implicits._
-    stages.toDS()
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/kind=stage/run=$runId")
-    tasks.toDS()
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/kind=task/run=$runId")
-  }
-
-  /** Flight-recorder sidecar layout: JSON-lines written via the Hadoop FS
-    * API — by the time SparkListenerApplicationEnd is delivered,
-    * SparkContext.stop() has set the stopped flag and no Spark job can
-    * run, so the end-of-app flush cannot go through parquet writes.
-    * history() reads both layouts and merges by run id. */
-  private def flightBase(kind: String) = s"$base/flight_$kind"
-
-  private def stageJsonLine(m: StageMetric): String =
-    s"""{"runId":${m.runId},"stageId":${m.stageId},"attempt":${m.attempt},""" +
-      s""""executorCpuTimeMs":${m.executorCpuTimeMs},"stageDurationMs":${m.stageDurationMs},""" +
-      s""""bytesRead":${m.bytesRead},"shuffleBytesWritten":${m.shuffleBytesWritten},""" +
-      s""""shuffleBytesRead":${m.shuffleBytesRead},"submittedAtMs":${m.submittedAtMs}}"""
-
-  private def taskJsonLine(m: TaskMetric): String =
-    s"""{"runId":${m.runId},"stageId":${m.stageId},"taskId":${m.taskId},""" +
-      s""""executorId":"${m.executorId.replace("\\", "\\\\").replace("\"", "\\\"")}",""" +
-      s""""durationMs":${m.durationMs},"peakMemory":${m.peakMemory},""" +
-      s""""shuffleReadBytes":${m.shuffleReadBytes}}"""
-
-  /** Persist without Spark jobs (application-end flush path). */
-  def persistDirect(hadoopConf: org.apache.hadoop.conf.Configuration,
-      listener: MetricsListener, runId: Int): Unit = {
-    def write(dir: String, lines: Seq[String]): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/run-$runId.jsonl")
-      val fs = p.getFileSystem(hadoopConf)
-      val out = fs.create(p, true)
-      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-        out, java.nio.charset.StandardCharsets.UTF_8))
-      try lines.foreach(w.println) finally w.close()
+  /** Stores written by builds before the JSON-lines layout kept Parquet
+    * under `kind=stage|task/run=N`. Reading one as empty history would
+    * silently restart tuning from a cold start, so it fails instead. */
+  private def requireCurrentLayout(conf: Configuration): Unit =
+    Seq("stage", "task").map(k => s"$base/kind=$k").find(exists(conf, _)).foreach { p =>
+      throw new IllegalStateException(
+        s"metrics store $p uses the Parquet run layout, which this build no " +
+          s"longer reads: runs are stored as JSON lines under $base/flight_stage " +
+          "and flight_task. Move or delete the old store to start a new one.")
     }
-    write(flightBase("stage"), listener.stageRows.map(stageJsonLine))
-    write(flightBase("task"), listener.taskRows.map(taskJsonLine))
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  /** Write one run as JSON lines, one line per row, each built from the
+    * row's case-class fields. Starts no Spark job. */
+  def persist(conf: Configuration, runId: Int,
+      stages: Seq[StageMetric], tasks: Seq[TaskMetric]): Unit = {
+    def write(kind: String, rows: Seq[Product]): Unit = {
+      val p = new Path(s"${dir(kind)}/run-$runId.jsonl")
+      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+        p.getFileSystem(conf).create(p, true), java.nio.charset.StandardCharsets.UTF_8))
+      try rows.foreach(r => w.println(json.writeValueAsString(r))) finally w.close()
+    }
+    write("stage", stages)
+    write("task", tasks)
   }
 
-  /** Rows of one kind across both layouts (parquet runs + flight sidecar). */
-  private def readKind[T: Encoder](spark: SparkSession, parquetPath: String,
-      jsonPath: String, cols: Seq[String]): Seq[T] = {
+  /** Rows of one kind across all runs. A crashed writer can leave a
+    * truncated trailing line, so malformed lines and rows missing a
+    * required field are dropped instead of letting the non-nullable
+    * decode throw and poison every later tuned run against this store. */
+  private def read[T: Encoder](spark: SparkSession, kind: String): Seq[T] = {
     val enc = implicitly[Encoder[T]]
-    // Schema evolution of the store itself: a field added to the model
-    // after a store was written (e.g. TaskMetric.shuffleReadBytes) is
-    // back-filled with a zero of its type, so old runs stay readable and
-    // merely opt out of the analyses that need the new signal.
-    def backfill(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      enc.schema.fields.foldLeft(df) { (d, f) =>
-        if (d.columns.contains(f.name)) d
-        else d.withColumn(f.name, lit(0).cast(f.dataType))
-      }
-    val fromParquet =
-      if (pathExists(spark, parquetPath))
-        backfill(spark.read.parquet(parquetPath))
-          .select(cols.map(col): _*).as[T](enc).collect().toSeq
-      else Nil
-    val fromFlight =
-      if (pathExists(spark, jsonPath)) {
-        // Flight files are the crashed-writer path by design, so a
-        // truncated trailing line is expected, not exceptional: drop
-        // malformed lines and any parsed row missing a required field
-        // instead of letting the non-nullable decode throw and poison
-        // every later tuned run against this store. Fields added to the
-        // model AFTER a flight file was written are zero-filled first so
-        // the old rows don't read as malformed.
-        val laterFields = Seq("shuffleReadBytes").filter(cols.contains)
-        spark.read.schema(enc.schema)
-          .option("mode", "DROPMALFORMED").json(jsonPath)
-          .na.fill(0L, laterFields)
-          .select(cols.map(col): _*).na.drop("any")
-          .as[T](enc).collect().toSeq
-      } else Nil
-    fromParquet ++ fromFlight
+    if (!exists(spark.sparkContext.hadoopConfiguration, dir(kind))) Nil
+    else spark.read.schema(enc.schema)
+      .option("mode", "DROPMALFORMED").json(dir(kind))
+      .na.fill(0L, laterFields.filter(enc.schema.fieldNames.contains))
+      .na.drop("any")
+      .as[T](enc).collect().toSeq
   }
 
-  /** All runs in id order, each assembled into per-stage infos. Missing or
-    * unreadable store ⇒ empty history (reference quirk Q2 fixed; R22
-    * error-tolerant read). */
+  /** All runs in id order, each assembled into per-stage infos. A missing
+    * store is empty history (reference quirk Q2 fixed); a store in the
+    * old Parquet layout throws. */
   def history(spark: SparkSession): List[List[StageRunInfo]] = {
     import spark.implicits._
+    requireCurrentLayout(spark.sparkContext.hadoopConfiguration)
     try {
-      // The embedded runId column is authoritative; the discovered `run`
-      // partition column is dropped by the projection inside readKind.
-      val stages = readKind[StageMetric](spark, s"$base/kind=stage",
-        flightBase("stage"),
-        Seq("runId", "stageId", "attempt", "executorCpuTimeMs",
-          "stageDurationMs", "bytesRead", "shuffleBytesWritten",
-          "shuffleBytesRead", "submittedAtMs"))
-      val tasks = readKind[TaskMetric](spark, s"$base/kind=task",
-        flightBase("task"),
-        Seq("runId", "stageId", "taskId", "executorId", "durationMs",
-          "peakMemory", "shuffleReadBytes"))
-      val tasksByRun = tasks.groupBy(_.runId)
-      stages.groupBy(_.runId).toList.sortBy(_._1).map { case (rid, st) =>
-        StageRunInfo.assemble(st, tasksByRun.getOrElse(rid, Nil))
-      }
+      val tasksByRun = read[TaskMetric](spark, "task").groupBy(_.runId)
+      read[StageMetric](spark, "stage").groupBy(_.runId).toList.sortBy(_._1)
+        .map { case (rid, st) => StageRunInfo.assemble(st, tasksByRun.getOrElse(rid, Nil)) }
     } catch {
-      // R22 error-tolerance is ONLY for an unreadable/empty layout (e.g. a
-      // crashed writer left a dir with no parquet footer): warn + empty
+      // R22 error-tolerance is ONLY for an unreadable layout: warn + empty
       // history. Runtime corruption (SparkException etc.) propagates.
       case e: org.apache.spark.sql.AnalysisException =>
         System.err.println(s"[graft.tuner] unreadable metrics store at $base: ${e.getMessage}")
@@ -146,26 +90,19 @@ class MetricsStore(root: String, appName: String) {
     }
   }
 
-  /** Next run id = max(recorded run ids across both layouts) + 1
-    * (reference R27 allocated sequentially; counting assembled history
-    * reused ids whenever a run captured zero stages — the new id must
-    * clear every id any layout has ever written, or persistDirect's
-    * overwriting create silently clobbers the prior run file). */
+  /** Next run id = max(recorded run file ids) + 1 (reference R27
+    * allocated sequentially; counting assembled history reused ids
+    * whenever a run captured zero stages, and persist's overwriting
+    * create would then silently clobber the prior run file). */
   def nextRunId(spark: SparkSession): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def ids(dir: String, extract: String => Option[Int]): Seq[Int] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
+    requireCurrentLayout(conf)
+    Seq("stage", "task").flatMap { k =>
+      val p = new Path(dir(k))
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap(st => extract(st.getPath.getName))
-    }
-    val parquetRun = "^run=(\\d+)$".r
-    val flightRun = "^run-(\\d+)\\.jsonl$".r
-    val recorded =
-      Seq("stage", "task").flatMap { k =>
-        ids(s"$base/kind=$k", n => parquetRun.findFirstMatchIn(n).map(_.group(1).toInt)) ++
-          ids(flightBase(k), n => flightRun.findFirstMatchIn(n).map(_.group(1).toInt))
-      }
-    recorded.foldLeft(-1)(math.max) + 1
+      else fs.listStatus(p).toSeq
+        .flatMap(st => runFile.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
+    }.foldLeft(-1)(math.max) + 1
   }
 }

@@ -15,9 +15,9 @@ case class TaskMetric(
     durationMs: Long,
     peakMemory: Long,
     // Per-task shuffle-read volume — the reducer-skew signal
-    // (SkewAdvisor). Added after round 8 started; stores persisted by
-    // older builds lack the column and read back as 0 (MetricsStore
-    // back-fills), which simply disables skew analysis on those runs.
+    // (SkewAdvisor). Added after the first stores were written; run
+    // files from older builds lack the field and read back as 0
+    // (MetricsStore zero-fills), which disables skew analysis on them.
     shuffleReadBytes: Long = 0L)
 
 case class StageMetric(
@@ -40,12 +40,8 @@ case class StageRunInfo(
     numExecutors: Int,
     shuffle: ShuffleVolume,
     tasks: Seq[TaskMetric]) {
-  /** Sum of task times (ComputePartitions.scala:26). */
-  def totalTaskTimeMs: Long = tasks.foldLeft(0L)(_ + _.durationMs)
   /** Partitions used = number of tasks (ComputePartitions.scala:28). */
   def numPartitionsUsed: Int = tasks.length
-  /** stageTime×numExecutors − totalTaskTime (ComputePartitions.scala:193-197). */
-  def executorIdleTimeMs: Long = stageTimeMs * numExecutors - totalTaskTimeMs
 }
 
 object StageRunInfo {
@@ -66,43 +62,19 @@ object StageRunInfo {
     }.toList
   }
 
-  /** Per run, the stage with the largest shuffle bytesWritten; history is
-    * aligned by stage ordinal across runs (ComputePartitions.scala:52-61).
-    * Returns Nil on empty history (fixes reference quirk Q2 — MatchError
-    * on a first-ever run). */
-  def stagesWithMostExpensiveShuffle(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
+  /** Per run, the stage with the largest `key`, aligned by stage ordinal
+    * across runs (ComputePartitions.scala:52-61): the ordinal is picked on
+    * the first run and looked up in every later one. Keys in use: shuffle
+    * bytes written (the decision table's target stage), input bytes (the
+    * scan tier) and shuffle bytes read (the reducer side, whose task
+    * count is what AQE settled on after coalescing). Returns Nil on empty
+    * history (fixes reference quirk Q2 — MatchError on a first-ever run). */
+  def aligned[K: Ordering](runs: Seq[List[StageRunInfo]])(
+      key: StageRunInfo => K): List[StageRunInfo] =
     runs.headOption match {
-      case None => Nil
-      case Some(first) if first.isEmpty => Nil
-      case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.shuffle.bytesWritten)._2
+      case Some(first) if first.nonEmpty =>
+        val idx = first.zipWithIndex.maxBy(p => key(p._1))._2
         runs.flatMap(r => r.lift(idx)).toList
-    }
-
-  /** The scan tier: the stage with the largest INPUT read (file bytes, not
-    * shuffle bytes), positionally aligned across runs like
-    * [[stagesWithMostExpensiveShuffle]] — the series that feeds the
-    * input-split recommendation (`spark.sql.files.maxPartitionBytes`). */
-  def scanStagesWithMostInput(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
-    runs.headOption match {
-      case None => Nil
-      case Some(first) if first.isEmpty => Nil
-      case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.inputSizeMb)._2
-        runs.flatMap(r => r.lift(idx)).toList
-    }
-
-  /** The REDUCER side of the biggest shuffle (max bytes read), positionally
-    * aligned across runs like [[stagesWithMostExpensiveShuffle]]. Its task
-    * count is what AQE actually settled on after post-shuffle coalescing —
-    * the series the tuner demo reports next to its own recommendation to
-    * show the two mechanisms converging rather than fighting. */
-  def reducersOfMostExpensiveShuffle(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
-    runs.headOption match {
-      case None => Nil
-      case Some(first) if first.isEmpty => Nil
-      case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.shuffle.bytesRead)._2
-        runs.flatMap(r => r.lift(idx)).toList
+      case _ => Nil
     }
 }

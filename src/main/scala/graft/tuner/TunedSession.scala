@@ -3,72 +3,47 @@ package graft.tuner
 import org.apache.spark.sql.SparkSession
 
 /** The tuning loop (reference EP1, CountingApp.scala:61-84) rebuilt around
-  * SparkSession: read history → pick the most-shuffle-expensive stage
-  * series → recommend a partition count → apply → record this run.
+  * SparkSession: read history → [[Tuner.decide]] → apply → record this run.
   *
   * Spark-4 adaptation: `spark.sql.shuffle.partitions` is runtime-settable,
-  * so the recommendation applies to the *current* session immediately;
+  * so the decision applies to the *current* session immediately;
   * `spark.default.parallelism` (RDD world) only applies to the next
-  * session and is returned for the caller's builder.
+  * session and is returned for the caller's builder by [[recommendedConf]].
   */
 class Tuner(metricsRoot: String, appName: String) {
   val store = new MetricsStore(metricsRoot, appName)
 
-  /** Recommendation from recorded history (empty history → cold start). */
-  def recommendPartitions(spark: SparkSession): Int = {
-    val history = store.history(spark)
-    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
-    val conf = spark.conf.getAll
-    new ComputePartitions(conf).fromStageMetricSharedCluster(target)
-  }
-
-  /** Scan-tier input-split recommendation from the recorded scan stage's
-    * input size (most recent run = current data size; cold start falls
-    * back to the memory bound alone). Runtime-settable like the shuffle
-    * knob — it re-plans the NEXT scan's FilePartitions. */
-  def recommendMaxPartitionBytes(spark: SparkSession): Long = {
-    val scans = StageRunInfo.scanStagesWithMostInput(store.history(spark))
-    new ComputePartitions(spark.conf.getAll)
-      .maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
-  }
-
   /** All tuned knobs for the NEXT session's builder (SURVEY §7:
     * DataFrame shuffles obey spark.sql.shuffle.partitions, RDD jobs
-    * spark.default.parallelism — the tuner sets both; plus the scan-tier
-    * input-split size). */
+    * spark.default.parallelism — the tuner sets both to the decision the
+    * next [[tuneAndRunTracked]] would apply). */
   def recommendedConf(spark: SparkSession): Map[String, String] = {
-    val p = recommendPartitions(spark).toString
-    // Skew tier: the latest run's straggler profile, when flagged, adds
-    // the AQE skew-join knobs (SkewAdvisor); balanced history adds none.
-    val skew = store.history(spark).lastOption
-      .flatMap(SkewAdvisor.analyze(_))
-      .map(SkewAdvisor.recommendedConf).getOrElse(Map.empty)
-    Map("spark.sql.shuffle.partitions" -> p, "spark.default.parallelism" -> p,
-      "spark.sql.files.maxPartitionBytes" ->
-        recommendMaxPartitionBytes(spark).toString) ++ skew
+    val d = Tuner.decide(store.history(spark), spark.conf.getAll)
+    d.conf + ("spark.default.parallelism" -> d.partitions.toString)
   }
 
-  /** Apply recommendation to this session and return it. */
-  def applyTo(spark: SparkSession): Int = {
-    val p = recommendPartitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    p
-  }
-
-  /** Run `body` with metrics recording; flush as the next run id. Returns
-    * (result, runId). */
-  def withRecording[T](spark: SparkSession)(body: => T): (T, Int) = {
+  /** The one record step: attach a listener, run `body`, wait for the
+    * async listener bus to drain so the run is complete, snapshot the
+    * rows once, persist them as the next run id, detach. */
+  private def record[T](spark: SparkSession)(body: => T): (T, Int, List[StageRunInfo]) = {
     val runId = store.nextRunId(spark)
     val listener = new MetricsListener(runId)
     spark.sparkContext.addSparkListener(listener)
     try {
       val result = body
-      // Listener-bus events are async; wait for the queue to drain before
-      // flushing so the recorded run is complete.
       org.apache.spark.graftaccess.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-      store.persist(spark, listener, runId)
-      (result, runId)
+      val stages = listener.stageRows
+      val tasks = listener.taskRows
+      store.persist(spark.sparkContext.hadoopConfiguration, runId, stages, tasks)
+      (result, runId, StageRunInfo.assemble(stages, tasks))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run `body` with metrics recording and no conf change; returns
+    * (result, runId). */
+  def withRecording[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val (result, runId, _) = record(spark)(body)
+    (result, runId)
   }
 
   /** Attach an ambient flight recorder: metrics auto-persist on
@@ -84,58 +59,65 @@ class Tuner(metricsRoot: String, appName: String) {
     fr
   }
 
-  /** Full loop step: tune from history, then record this run. */
-  def tuneAndRun[T](spark: SparkSession)(body: => T): (T, Int, Int) = {
-    val r = tuneAndRunTracked(spark)(body)
-    (r.result, r.partitions, r.runId)
-  }
-
-  /** [[tuneAndRun]] that exposes what one store read already yields: the
-    * pre-run history the recommendation was derived from, and this run's
-    * own stage infos assembled straight from the listener buffers. A
-    * caller that wants the post-run history (e.g. the demo's AQE-settle
-    * series) appends `recorded` to `priorHistory` instead of re-reading
-    * the store — one history scan per iteration, not two (round-4
-    * q_tuner_loop regression). */
+  /** Full loop step: decide from one store read, apply the decision to
+    * the session, then record this run. Also returns the pre-run history
+    * and this run's own stage infos assembled straight from the listener
+    * rows. A caller that wants the post-run history (e.g. the demo's
+    * AQE-settle series) appends `recorded` to `priorHistory` instead of
+    * re-reading the store: one history read per iteration, not two. */
   def tuneAndRunTracked[T](spark: SparkSession)(body: => T): TunedRun[T] = {
     val history = store.history(spark)
-    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
-    val cp = new ComputePartitions(spark.conf.getAll)
-    // Slot-floored at the application boundary (see applySlotFloor's doc:
-    // AQE-coalesced executed counts must not feed back as sub-slot
-    // initial counts — the r14 sf1 A/B hit a recommendation of 1).
-    val partitions = cp.applySlotFloor(cp.fromStageMetricSharedCluster(target))
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    // Scan tier rides the same history read: split size from the biggest
-    // recorded input stage (cold start → memory bound alone).
-    val scans = StageRunInfo.scanStagesWithMostInput(history)
-    val splitBytes =
-      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    // Skew tier rides the same history read: the latest recorded run's
-    // per-task shuffle-read profile decides whether this run needs AQE's
-    // skew-splitting thresholds widened (SkewAdvisor). Balanced or
-    // pre-evolution history sets nothing — AQE defaults stand.
-    history.lastOption.flatMap(SkewAdvisor.analyze(_))
-      .map(SkewAdvisor.recommendedConf).getOrElse(Map.empty)
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    val runId = store.nextRunId(spark)
-    val listener = new MetricsListener(runId)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val result = body
-      org.apache.spark.graftaccess.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-      // ONE snapshot feeds both the store write and the in-memory view:
-      // the persist jobs' own stage events land on the still-attached
-      // listener, so a second read after persist would see stages the
-      // store never wrote (asserted equal in TunerIntegrationSpec).
-      val stageSnap = listener.stageRows
-      val taskSnap = listener.taskRows
-      store.persistRows(spark, stageSnap, taskSnap, runId)
-      val recorded = StageRunInfo.assemble(stageSnap, taskSnap)
-      TunedRun(result, partitions, splitBytes, runId, history, recorded)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val d = Tuner.decide(history, spark.conf.getAll)
+    d.conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (result, runId, recorded) = record(spark)(body)
+    TunedRun(result, d.partitions, d.maxPartitionBytes, runId, history, recorded)
   }
+}
+
+object Tuner {
+  /** The one decision function: every tier derived from one history.
+    *   - shuffle: the reference decision table over the most expensive
+    *     shuffle's series, slot-floored (see `applySlotFloor`);
+    *   - scan: split size from the biggest input stage of the latest run
+    *     (cold start → memory bound alone);
+    *   - skew: the latest run's per-task shuffle-read profile
+    *     (balanced or pre-evolution history → None, AQE defaults stand). */
+  def decide(history: Seq[List[StageRunInfo]], conf: Map[String, String]): Decision = {
+    val cp = new ComputePartitions(conf)
+    val target = StageRunInfo.aligned(history)(_.shuffle.bytesWritten)
+    val scans = StageRunInfo.aligned(history)(_.inputSizeMb)
+    Decision(
+      cp.applySlotFloor(cp.fromStageMetricSharedCluster(target)),
+      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0)),
+      history.lastOption.flatMap(SkewAdvisor.analyze))
+  }
+
+  /** Run `body`, then put back every session key a [[Decision]] can set
+    * as it was before: set keys get their old value, unset keys are
+    * unset again. */
+  def withConfRestored[T](spark: SparkSession)(body: => T): T = {
+    val saved = Decision.confKeys.map(k => k -> spark.conf.getOption(k))
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+/** What the tuner applies to the next run. */
+case class Decision(partitions: Int, maxPartitionBytes: Long,
+    skew: Option[SkewAdvisor.SkewReport]) {
+  /** The session conf this decision sets. */
+  def conf: Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString) ++
+      skew.map(SkewAdvisor.recommendedConf).getOrElse(Map.empty)
+}
+
+object Decision {
+  /** Every key [[Decision.conf]] can hold. */
+  val confKeys: Seq[String] = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.files.maxPartitionBytes") ++ SkewAdvisor.confKeys
 }
 
 /** One tracked tuning-loop step — see [[Tuner.tuneAndRunTracked]]. */

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     distilled into the `live_loop_ok` self-check column instead
   *     (3 runs recorded, strictly increasing run ids, every
   *     recommendation positive, AQE settle series present).
-  *  2. CANONICAL decision-table walk — the same `ComputePartitions`
-  *     hill-climb driven over a fixed synthetic history under a fixed
+  *  2. CANONICAL decision-table walk — the same `Tuner.decide` driven
+  *     over a fixed synthetic history under a fixed
   *     cluster profile (8 executors × 4 cores × 8g), visiting all five
   *     branches (cold start, single run, improving, regressing,
   *     plateau) plus the scan-split and reducer-skew tiers. A pure
@@ -50,9 +50,7 @@ object TunerDemo {
     import s.implicits._
     val tmp = graft.core.TempDirs.create("graft-tuner-demo")
     val tuner = new Tuner(tmp, "demo")
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    val beforeSplit = s.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val liveOk = try {
+    val liveOk = Tuner.withConfRestored(s) {
       val runs = (0 until 3).map { _ =>
         tuner.tuneAndRunTracked(s) {
           graft.queries.RelationalA.queries("q01_pricing_summary")(s, dir).count()
@@ -60,20 +58,13 @@ object TunerDemo {
       }
       // AQE-settled series: reducer task count of the biggest shuffle per
       // recorded run — present iff the listener captured complete runs.
-      val fullHistory = runs.last.priorHistory :+ runs.last.recorded
       val settled = StageRunInfo
-        .reducersOfMostExpensiveShuffle(fullHistory)
+        .aligned(runs.last.priorHistory :+ runs.last.recorded)(_.shuffle.bytesRead)
         .map(_.numPartitionsUsed)
       runs.length == 3 &&
         runs.map(_.runId) == Seq(0, 1, 2) &&
         runs.forall(_.partitions > 0) &&
         settled.nonEmpty && settled.forall(_ > 0)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", before)
-      beforeSplit match {
-        case Some(v) => s.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None => s.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
     }
 
     // Deterministic walk: fixed history visiting every decision branch.
@@ -90,18 +81,12 @@ object TunerDemo {
       ("improving", Seq(h1, h2)),
       ("regressing", Seq(h1, h2, h3)),
       ("plateau", Seq(h1, h2, h3, h4, h5)))
-    val cp = new ComputePartitions(canonConf)
     val rows = steps.zipWithIndex.map { case ((branch, hist), i) =>
-      val target = StageRunInfo.stagesWithMostExpensiveShuffle(hist)
-      val rec = cp.fromStageMetricSharedCluster(target)
-      val scans = StageRunInfo.scanStagesWithMostInput(hist)
-      val splitMb = math.round(
-        cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb)
-          .getOrElse(0.0)) / (1024.0 * 1024.0)).toInt
-      val skew = hist.lastOption.flatMap(SkewAdvisor.analyze(_))
-      (i, branch, rec, splitMb,
-        skew.map(r => math.round(r.ratio * 100.0) / 100.0).getOrElse(-1.0),
-        skew.exists(_.skewed), liveOk)
+      val d = Tuner.decide(hist, canonConf)
+      val splitMb = math.round(d.maxPartitionBytes / (1024.0 * 1024.0)).toInt
+      (i, branch, d.partitions, splitMb,
+        d.skew.map(r => math.round(r.ratio * 100.0) / 100.0).getOrElse(-1.0),
+        d.skew.exists(_.skewed), liveOk)
     }
     rows.toDF("step", "branch", "recommended_partitions",
         "recommended_split_mb", "skew_ratio", "skew_flag", "live_loop_ok")
@@ -115,7 +100,8 @@ object TunerDemo {
     * slots = 4×8 = 32; task memory = 8192×0.6×0.5/4 = 614.4 MB (split
     * bound 307 MB cold, 2048/32 = 64 MB warm); single-run 32+8 = 40;
     * improving max(32,32,40)+8 = 48; regressing → best CPU run = 40;
-    * plateau keeps 40; planted straggler 512 MB/64 MB = ratio 8. */
+    * plateau keeps 40; planted straggler 512 MB/64 MB = ratio 8. Every
+    * count is at least the 32 slots, so `decide`'s slot floor keeps it. */
   val oracle: String = """
     SELECT CAST(step AS INT) AS step, branch,
            CAST(rp AS INT) AS recommended_partitions,

@@ -94,13 +94,20 @@ class ComputePartitionsSpec extends SparkSpec {
     val run2 = List(
       mkStage(11, 11, 1, 1, 2, 5),
       mkStage(88, 88, 1, 1, 2, 5).copy(shuffle = ShuffleVolume(900, 0)))
-    val series = StageRunInfo.stagesWithMostExpensiveShuffle(Seq(run1, run2))
+    val series = StageRunInfo.aligned(Seq(run1, run2))(_.shuffle.bytesWritten)
     assert(series.map(_.executorCpuTimeMs) == List(99, 88))
-    assert(StageRunInfo.stagesWithMostExpensiveShuffle(Nil) == Nil)
+    assert(StageRunInfo.aligned(Nil)(_.shuffle.bytesWritten) == Nil)
   }
 
-  test("full-utilization alternative policy keeps config when no idle time") {
-    val busy = mkStage(100, 10, 1, 2, 4, 5) // idle = 10*2 - 20 = 0
-    assert(cp.fromStageMetricFullUtilization(busy) == 4)
+  test("Tuner.decide floors a sub-slot regressing recommendation at the slot count") {
+    // The slot-floor fixture above, one single-stage run per entry: the
+    // table returns the best run's 5 partitions, the decision applies 8.
+    val h = List(
+      mkStage(80, 85, 100, 3, 5, 10),
+      mkStage(105, 110, 100, 3, 25, 11))
+    assert(cp.fromStageMetricSharedCluster(h) == 5)
+    val d = Tuner.decide(h.map(List(_)), conf)
+    assert(d.partitions == 8) // 4 execs × 2 cores
+    assert(d.conf("spark.sql.shuffle.partitions") == "8")
   }
 }

@@ -63,6 +63,34 @@ class DotExprSpec extends SparkSpec {
     assert(got(1).isNullAt(0))
   }
 
+  test("a null element yields null, not the element's primitive slot") {
+    GraftExtensions.ensureRegistered(spark)
+    val df = Seq(
+      (Seq(Some(1.0), None, Some(3.0)), Seq(Some(4.0), Some(5.0), Some(6.0))),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), None)),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), Some(4.0)))).toDF("a", "b")
+    val got = df.select(call_function("graft_dot", col("a"), col("b"))).collect()
+    assert(got(0).isNullAt(0) && got(1).isNullAt(0))
+    assert(!got(2).isNullAt(0) && got(2).getDouble(0) == 11.0)
+  }
+
+  test("a null element yields null on the codegen path (parquet-scan rooted)") {
+    GraftExtensions.ensureRegistered(spark)
+    val dir = graft.core.TempDirs.create("graft-dotspec-nullelem")
+    Seq((1, Seq(Some(1.0), None), Seq(Some(3.0), Some(4.0))),
+        (2, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), Some(4.0))),
+        (3, Seq(Some(1.0), Some(2.0)), Seq(None, Some(4.0)))).toDF("k", "a", "b")
+      .write.mode("overwrite").parquet(dir)
+    val plan = spark.read.parquet(dir)
+      .select(col("k"), call_function("graft_dot", col("a"), col("b")).as("d"))
+    assert(plan.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]),
+      "projection not whole-stage codegen'd")
+    val got = plan.orderBy("k").collect()
+    assert(got(0).isNullAt(1) && got(2).isNullAt(1))
+    assert(!got(1).isNullAt(1) && got(1).getDouble(1) == 11.0)
+  }
+
   test("non-array input fails analysis with the type-check message") {
     GraftExtensions.ensureRegistered(spark)
     val df = Seq((1.0, Array(1.0))).toDF("a", "b")

@@ -7,7 +7,8 @@ import graft.tuner._
   * synthetic task metrics, a LIVE skewed aggregation recorded through
   * the real listener (per-task shuffle-read bytes captured end-to-end),
   * and store schema evolution (task rows persisted WITHOUT
-  * shuffleReadBytes read back zero-filled instead of failing). */
+  * shuffleReadBytes read back zero-filled instead of failing; a store in
+  * the old Parquet layout fails loudly instead of reading as empty). */
 class SkewAdvisorSpec extends SparkSpec {
 
   private def stage(taskBytes: Seq[Long]): StageRunInfo =
@@ -54,8 +55,7 @@ class SkewAdvisorSpec extends SparkSpec {
     // 200k rows, 99% on one key; 8 reduce partitions with AQE coalescing
     // disabled so the hot partition stays visible to the task metrics.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    try Tuner.withConfRestored(spark) {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", "8")
       val tracked = tuner.tuneAndRunTracked(spark) {
@@ -81,32 +81,41 @@ class SkewAdvisorSpec extends SparkSpec {
         .getOption("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
       assert(factor.exists(_.toInt >= 2),
         "skew advice not auto-applied by the tuning loop")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      Seq("spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-        .foreach(spark.conf.unset)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
   test("store reads task rows persisted without shuffleReadBytes (zero-filled)") {
-    import spark.implicits._
+    import java.nio.file.{Files, Paths}
     val root = graft.core.TempDirs.create("graft-skew-legacy")
     val store = new MetricsStore(root, "legacy")
-    // Persist an old-layout run: the task parquet lacks the new column.
-    Seq((0, 1, 0L, "driver", 10L, 0L), (0, 1, 1L, "driver", 12L, 0L))
-      .toDF("runId", "stageId", "taskId", "executorId", "durationMs", "peakMemory")
-      .write.parquet(s"$root/legacy/kind=task/run=0")
+    // A run written before the field existed: its task lines lack it.
+    def write(kind: String, lines: String*): Unit = {
+      val d = Files.createDirectories(Paths.get(root, "legacy", s"flight_$kind"))
+      Files.writeString(d.resolve("run-0.jsonl"), lines.mkString("", "\n", "\n"))
+    }
+    write("task",
+      """{"runId":0,"stageId":1,"taskId":0,"executorId":"driver","durationMs":10,"peakMemory":0}""",
+      """{"runId":0,"stageId":1,"taskId":1,"executorId":"driver","durationMs":12,"peakMemory":0}""")
+    write("stage",
+      """{"runId":0,"stageId":1,"attempt":0,"executorCpuTimeMs":5,"stageDurationMs":100,""" +
+        """"bytesRead":0,"shuffleBytesWritten":0,"shuffleBytesRead":1024,"submittedAtMs":0}""")
+    val hist = store.history(spark)
+    assert(hist.nonEmpty && hist.head.nonEmpty)
+    assert(hist.head.head.tasks.map(_.shuffleReadBytes) == Seq(0L, 0L),
+      "legacy task rows not zero-filled")
+  }
+
+  test("a store in the old Parquet layout fails loudly, not as a cold start") {
+    import spark.implicits._
+    val root = graft.core.TempDirs.create("graft-old-layout")
+    val store = new MetricsStore(root, "old")
     Seq((0, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L))
       .toDF("runId", "stageId", "attempt", "executorCpuTimeMs",
         "stageDurationMs", "bytesRead", "shuffleBytesWritten",
         "shuffleBytesRead", "submittedAtMs")
-      .write.parquet(s"$root/legacy/kind=stage/run=0")
-    val hist = store.history(spark)
-    assert(hist.nonEmpty && hist.head.nonEmpty)
-    assert(hist.head.head.tasks.map(_.shuffleReadBytes) == Seq(0L, 0L),
-      "legacy task rows not zero-backfilled")
+      .write.parquet(s"$root/old/kind=stage/run=0")
+    val e = intercept[IllegalStateException](store.history(spark))
+    assert(e.getMessage.contains("Parquet run layout") &&
+      e.getMessage.contains("flight_stage"), e.getMessage)
   }
 }

@@ -25,17 +25,16 @@ class TunerIntegrationSpec extends SparkSpec {
     assert(h1.head.exists(_.tasks.nonEmpty), "tasks captured")
     assert(h1.head.exists(_.executorCpuTimeMs > 0), "cpu time recorded")
 
-    // Second recorded run → id 1, and the tuner now recommends from history.
+    // Second recorded run → id 1, and the tuner now decides from history.
     val (_, runId1) = tuner.withRecording(spark)(job())
     assert(runId1 == 1)
-    val rec = tuner.recommendPartitions(spark)
-    assert(rec > 0)
 
-    // Applying sets spark.sql.shuffle.partitions on the live session.
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val applied = tuner.applyTo(spark)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == applied.toString)
-    spark.conf.set("spark.sql.shuffle.partitions", before) // restore for other specs
+    // A tuned run applies its decision to the live session.
+    Tuner.withConfRestored(spark) {
+      val r = tuner.tuneAndRunTracked(spark)(job())
+      assert(r.partitions > 0 && r.runId == 2)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == r.partitions.toString)
+    }
   }
 
   test("tracked run's (priorHistory :+ recorded) equals a fresh store read") {
@@ -46,15 +45,14 @@ class TunerIntegrationSpec extends SparkSpec {
     val tuner = new Tuner(dir, "tracked")
     def job(): Long = spark.read.parquet(s"$sf/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    Tuner.withConfRestored(spark) {
       val r1 = tuner.tuneAndRunTracked(spark)(job())
       val r2 = tuner.tuneAndRunTracked(spark)(job())
       assert(r1.priorHistory.isEmpty && r2.priorHistory.length == 1)
       val reread = tuner.store.history(spark)
       assert(reread == r2.priorHistory :+ r2.recorded,
         "tracked view diverged from the persisted store")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("tuner loop reports AQE's settled counts and converges toward them") {
@@ -64,8 +62,7 @@ class TunerIntegrationSpec extends SparkSpec {
     // trajectory to the post-AQE settle series.
     val dir = Files.createTempDirectory("graft-loop").toString
     val tuner = new Tuner(dir, "loop")
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val (recs, settled) = try {
+    val (recs, settled) = Tuner.withConfRestored(spark) {
       val runs = (0 until 3).map { _ =>
         tuner.tuneAndRunTracked(spark) {
           graft.queries.RelationalA.queries("q01_pricing_summary")(spark, sf).count()
@@ -74,9 +71,8 @@ class TunerIntegrationSpec extends SparkSpec {
       assert(runs.map(_.runId) == Seq(0, 1, 2), "run ids advance")
       val fullHistory = runs.last.priorHistory :+ runs.last.recorded
       (runs.map(_.partitions),
-        graft.tuner.StageRunInfo.reducersOfMostExpensiveShuffle(fullHistory)
-          .map(_.numPartitionsUsed))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+        StageRunInfo.aligned(fullHistory)(_.shuffle.bytesRead).map(_.numPartitionsUsed))
+    }
     assert(settled.forall(_ > 0), s"AQE-settled series missing: $settled")
     // Convergence direction: the tuner learns from post-AQE task counts,
     // so the gap between its initial-count recommendation and AQE's
@@ -124,7 +120,7 @@ class TunerIntegrationSpec extends SparkSpec {
 
   test("empty store yields cold-start recommendation, not an error (Q2)") {
     val tuner = new Tuner(Files.createTempDirectory("graft-empty").toString, "none")
-    assert(tuner.recommendPartitions(spark) > 0)
+    assert(tuner.recommendedConf(spark)("spark.sql.shuffle.partitions").toInt > 0)
     assert(tuner.store.nextRunId(spark) == 0)
   }
 
@@ -156,7 +152,7 @@ class TunerIntegrationSpec extends SparkSpec {
     val h = tuner.store.history(spark)
     assert(h.length == 1, s"corrupt lines dropped, got ${h.length} runs")
     assert(h.head.map(_.executorCpuTimeMs).sorted == clean.head.map(_.executorCpuTimeMs).sorted)
-    assert(tuner.recommendPartitions(spark) > 0)
+    assert(tuner.recommendedConf(spark)("spark.sql.shuffle.partitions").toInt > 0)
   }
 
   test("run ids never reuse an existing id even when a run recorded zero stages") {
@@ -217,9 +213,8 @@ class TunerIntegrationSpec extends SparkSpec {
         "md5(cast(id + 7 as string)) AS b")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val key = "spark.sql.files.maxPartitionBytes"
-    val before = spark.conf.getOption(key)
     def scanTasks(): Int = spark.read.parquet(dir).rdd.getNumPartitions
-    try {
+    Tuner.withConfRestored(spark) {
       spark.conf.set(key, (128L * 1024 * 1024).toString)
       val defaultTasks = scanTasks()
       spark.conf.set(key, rec.toString)
@@ -227,9 +222,47 @@ class TunerIntegrationSpec extends SparkSpec {
       assert(tunedTasks > defaultTasks,
         s"recommendation $rec did not change scan task count " +
           s"($defaultTasks -> $tunedTasks)")
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
+  }
+
+  /** Stage and task rows that assemble into one single-stage run. */
+  private def runRows(runId: Int, cpuMs: Long, partitions: Int): (Seq[StageMetric], Seq[TaskMetric]) =
+    (Seq(StageMetric(runId, 0, 0, cpuMs, cpuMs, 100L << 20, 20L, 30L, 0L)),
+      (0 until partitions).map(i => TaskMetric(runId, 0, i.toLong, s"e${i % 3}", 10L, 0L)))
+
+  test("store.persist starts no Spark job") {
+    val store = new MetricsStore(Files.createTempDirectory("graft-nojob").toString, "nojob")
+    val (stages, tasks) = runRows(0, 80L, 5)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      store.persist(spark.sparkContext.hadoopConfiguration, 0, stages, tasks)
+      org.apache.spark.graftaccess.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get == 0, s"persist started ${jobs.get} Spark jobs")
+    assert(store.history(spark) == List(StageRunInfo.assemble(stages, tasks)))
+  }
+
+  test("recommendedConf's shuffle partitions equal what the next tuned run applies") {
+    // A regressing history whose best run used fewer partitions (2) than
+    // this session has slots (local[4, 2] → 4): the table returns 2, and
+    // both the recommendation and the applied decision must be floored.
+    val tuner = new Tuner(Files.createTempDirectory("graft-floor").toString, "floor")
+    for ((runId, cpuMs, partitions) <- Seq((0, 80L, 2), (1, 105L, 25))) {
+      val (stages, tasks) = runRows(runId, cpuMs, partitions)
+      tuner.store.persist(spark.sparkContext.hadoopConfiguration, runId, stages, tasks)
+    }
+    val slots = new ComputePartitions(spark.conf.getAll).possibleConcurrentTasks()
+    assert(slots > 2, s"fixture needs more than 2 slots, session has $slots")
+    val recommended = tuner.recommendedConf(spark)("spark.sql.shuffle.partitions")
+    val applied = Tuner.withConfRestored(spark) {
+      tuner.tuneAndRunTracked(spark)(spark.range(10).count()).partitions
+    }
+    assert(recommended == applied.toString)
+    assert(applied == slots)
   }
 }

@@ -22,8 +22,7 @@ class WordCountAppSpec extends SparkSpec {
     val metrics = Files.createTempDirectory("wc2-metrics").toString
     val args = WordCountApp.Args(in.toString, out, metrics, "wc2-spec", tune = false)
 
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    graft.tuner.Tuner.withConfRestored(spark) {
       spark.conf.set("spark.sql.shuffle.partitions", "7")
       val (partitions, runId) = WordCountApp.run(spark, args)
       assert(runId == 0)
@@ -32,7 +31,7 @@ class WordCountAppSpec extends SparkSpec {
         "record-only mode must not rewrite conf")
       val tuner = new graft.tuner.Tuner(metrics, "wc2-spec")
       assert(tuner.store.history(spark).length == 1, "metrics still recorded")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("two tuned runs share history through the metrics store") {
@@ -42,8 +41,7 @@ class WordCountAppSpec extends SparkSpec {
     val metrics = Files.createTempDirectory("wc-metrics").toString
     val args = WordCountApp.Args(in.toString, out, metrics, "wc-spec")
 
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    graft.tuner.Tuner.withConfRestored(spark) {
       val (_, run0) = WordCountApp.run(spark, args)
       val (_, run1) = WordCountApp.run(spark, args)
       assert(run0 == 0 && run1 == 1, "run ids must advance via the store")
@@ -53,6 +51,6 @@ class WordCountAppSpec extends SparkSpec {
       assert(rows("words") == 4L)
       assert(rows("panda") == 1L)
       assert(!rows.contains("the"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 }
